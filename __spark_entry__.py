@@ -98,7 +98,7 @@ def entry(spark: SparkSession) -> DataFrame:
     pages = pages_from_documents(docs)
     pipe = KGPipeline(ATOM)
     q = pipe.token_quintuples_from_pages(pages)
-    _, edges = canonicalize_kg(q, ATOM, HashEmbedder(), temporal_empty=True)
+    _, edges = canonicalize_kg(q, ATOM, HashEmbedder())
     return edges.select(
         "src_name",
         "src_label",
@@ -1480,7 +1480,7 @@ def _q_kg_build_graph(spark, sf_dir):  # rows-only: full similarity-merge path
     pages = pages_from_documents(_docs(spark, sf_dir))
     pipe = KGPipeline(ATOM)
     q = pipe.token_quintuples_from_pages(pages)
-    _, edges = canonicalize_kg(q, ATOM, HashEmbedder(), temporal_empty=True)
+    _, edges = canonicalize_kg(q, ATOM, HashEmbedder())
     return edges.select(
         "src_name", "src_label", "pred", "dst_name", "dst_label",
         F.size("t_obs").alias("n_obs"),
@@ -1579,7 +1579,7 @@ def _q_kg_merge_eval(spark, sf_dir):
     ).localCheckpoint()
     n_quint = q.count()
     cfg = replace(ATOM, match=replace(ATOM.match, ent_threshold=2.0, rel_threshold=2.0))
-    entities, edges = canonicalize_kg(q, cfg, _OneHotEmbedder(), temporal_empty=True)
+    entities, edges = canonicalize_kg(q, cfg, _OneHotEmbedder())
     return er_rr_precision(
         entities,
         edges,
@@ -1835,7 +1835,7 @@ def _q_dedup_simhash_verified(spark, sf_dir):
 
 def _q_kg_build_graph_exact(spark, sf_dir):
     """The FULL canonicalization pipeline (normalize -> entity/predicate
-    resolution -> remap joins -> timeparse split -> wide edge aggregation
+    resolution -> remap joins -> timestamp parse -> wide edge aggregation
     with t_obs stamping), oracle-checked end-to-end: with both similarity
     thresholds above 1.0 no cosine can merge anything, so resolution is
     GUARANTEED to be the identity on distinct normalized entities and the
@@ -1855,7 +1855,7 @@ def _q_kg_build_graph_exact(spark, sf_dir):
     pages = pages_from_documents(_docs(spark, sf_dir))
     pipe = KGPipeline(cfg)
     q = pipe.token_quintuples_from_pages(pages)
-    _, edges = canonicalize_kg(q, cfg, HashEmbedder(), temporal_empty=True)
+    _, edges = canonicalize_kg(q, cfg, HashEmbedder())
     return edges.select(
         "src_name", "src_label", "pred", "dst_name", "dst_label",
         F.size("t_obs").cast("long").alias("n_obs"),

@@ -4,17 +4,23 @@ A from-scratch re-expression of the capabilities of AuvaLab/itext2kg (ATOM +
 iText2KG) on the Spark DataFrame API:
 
     pages (url, warc_ts, html, text, lang)
-      --distill (mapInPandas, byte-identical text per url)-->
+      --distill (pure Catalyst, byte-identical text per url)-->
     facts (url, obs_ts, fact_idx, fact)
-      --extract (pandas UDF -> array<struct> -> explode)-->
+      --extract (grammar: mapInPandas batch regex | token: pure Catalyst)-->
     quintuples (subj, pred, obj, t_start, t_end) with lineage
+      --timestamp parse (Catalyst; dateutil pandas UDF only on rows it misses)-->
       --embed (hash/pluggable pandas UDF over distinct strings)-->
       --similarity join + connected components canonicalization-->
     entities / edges canonical tables (incremental MERGE semantics)
 
-Everything is DataFrame/Catalyst expressions except exactly three pandas/Arrow
-UDF families (distill, extract, embed) plus the LSH-signature helper, mirroring
-the reference's own UDF surface (LLM extraction + embedding calls).
+On the KG path Python runs in these stages only: grammar extraction (or a
+custom extractor's pandas UDF), embedding, candidate cosine scoring on the
+distributed resolve path (BLAS per Arrow batch), and the dateutil timestamp
+fallback, which is planned only when the batch holds a date the Catalyst
+fast parse misses — mirroring the reference's own non-relational surface
+(LLM extraction + embedding calls). Distill, sentence split, token
+extraction, remap and aggregation are Catalyst expressions, joins and
+aggregates.
 
 Reference semantics are documented per-module with file:line citations into
 /root/reference (read-only); no reference code is copied.

@@ -141,23 +141,8 @@ class PipelineConfig:
     embed: EmbedConfig = field(default_factory=EmbedConfig)
     # "atom" (quintuples with t_start/t_end) or "star" (t_obs only)
     mode: str = "atom"
-    # Materialize the extracted quintuple table before the merge consumers
-    # (3 of them) read it. True is right when extraction is expensive (LLM
-    # API calls — never re-extract); False trades bounded recompute of a
-    # cheap extractor for removing the checkpoint barrier from the serial
-    # path (the recompute is parallel work, the barrier is not).
-    materialize_quintuples: bool = True
     # shuffle partitioning for the merge stages; None = leave session default
     shuffle_partitions: int | None = None
-    # Two-phase salted edge aggregation: >1 spreads each canonical triple's
-    # list accumulation over this many salt buckets (partial flatten per
-    # bucket, final flatten+sort per triple). The final edge groupBy is the
-    # one aggregation where map-side partial combine does NOT shrink data
-    # (collect_list carries every element), so a hyper-re-observed edge —
-    # one (src, pred, dst) with 10^8 mentions in a crawl — funnels its whole
-    # list through a single reduce task. Off by default: below extreme skew
-    # the plain partial-agg groupBy is one shuffle instead of two.
-    edge_salt: int = 0
 
 
 ATOM = PipelineConfig()

@@ -40,10 +40,15 @@ _FAST_FORMATS = [
 # a small set of date surface forms across millions of mentions, so dateutil
 # (~30-50us per parse) should run once per DISTINCT string per worker, not
 # once per element — the same worker-lifetime bounded-cache pattern as the
-# simhash token cache (guide §4.5: heavyweight per-item work once). Results
-# for a given string are identical with or without the memo (dateutil parse
-# of a fully-specified string is deterministic); the bound caps worker memory
-# on adversarial corpora with unbounded distinct strings.
+# simhash token cache (guide §4.5: heavyweight per-item work once). For a
+# fully specified string (year, month and day present) the memoized result is
+# the one dateutil would return on every call. An underspecified string
+# ("July 17th", "17:30") takes its missing fields from the current date, so
+# the memo pins whatever the first parse in this worker saw: a worker that
+# lives across midnight (missing day) or a new year (missing year) keeps
+# serving the earlier date, where a live dateutil call would move on. The
+# bound caps worker memory on adversarial corpora with unbounded distinct
+# strings.
 _DATEUTIL_CACHE: dict[str, float | None] = {}
 _DATEUTIL_CACHE_MAX = 1 << 20
 
@@ -89,7 +94,9 @@ def _fast_parse(col: Column) -> Column:
         digit are jump tokens dateutil skips wholesale, so stripping them
         and parsing the month-name layouts is equivalent. Anything else
         (spaced suffixes, lowercase months, 2-digit years) still falls
-        through to the dateutil fallback unchanged."""
+        through to the dateutil fallback unchanged.
+
+    Years below 100 are dropped afterwards, by `_fast_epoch`."""
     tries = [F.try_to_timestamp(col, F.lit(fmt)) for fmt in _FAST_FORMATS]
     tries += [
         F.try_to_timestamp(col, F.lit("MM.dd.yyyy")),
@@ -101,6 +108,23 @@ def _fast_parse(col: Column) -> Column:
         for fmt in ("MMMM d yyyy", "MMMM d, yyyy", "d MMMM yyyy")
     ]
     return F.coalesce(*tries)
+
+
+def _fast_epoch(ts: Column) -> Column:
+    """Fast-parse timestamp -> epoch seconds, null before year 100 so that
+    dateutil decides those strings: Spark reads `yyyy` as a proleptic year
+    and accepts year 0, which dateutil rejects (datetime MINYEAR = 1), and
+    dateutil moves some years below 100 into the current century
+    ("May 5 0099" is 1999)."""
+    return F.unix_timestamp(F.when(F.year(ts) >= 100, ts)).cast("double")
+
+
+def _fast_array(col: Column) -> Column:
+    """array<string> -> array<double> of fast-parse epochs, null per miss.
+    Two transforms, so the year guard reads a parsed element instead of
+    re-running the coalesce (lambda bodies are interpreted, with no
+    common-subexpression reuse)."""
+    return F.transform(F.transform(col, _fast_parse), _fast_epoch)
 
 
 @F.pandas_udf(DoubleType())
@@ -118,7 +142,7 @@ def parse_timestamp_expr(col: Column, use_dateutil_fallback: bool = True) -> Col
 
     Callers drop nulls to reproduce the reference's skip-on-error (F4).
     """
-    fast = F.unix_timestamp(_fast_parse(col)).cast("double")
+    fast = _fast_epoch(_fast_parse(col))
     if not use_dateutil_fallback:
         return fast
     # dateutil only runs where the fast path missed AND the input is non-null.
@@ -163,34 +187,13 @@ def parse_timestamp_array(col: Column, use_dateutil_fallback: bool = True) -> Co
     The per-row-Python cost is bounded by the dirty-data fraction, not the
     table size.
     """
-    fast = F.transform(col, lambda x: F.unix_timestamp(_fast_parse(x)).cast("double"))
+    fast = _fast_array(col)
     fast_ok = F.filter(fast, lambda x: x.isNotNull())
     if not use_dateutil_fallback:
         return fast_ok
-    miss = F.exists(
-        F.zip_with(col, fast, lambda s, d: s.isNotNull() & d.isNull()),
-        lambda b: b,
-    )
+    miss = _array_miss(col, fast)
     combined = _dateutil_epoch_array(F.when(miss, col), F.when(miss, fast))
     return F.when(miss, combined).otherwise(fast_ok)
-
-
-def _with_fast_arrays(df, cols: list[str]):
-    """Project the Catalyst fast-parse of each array column as a REAL column
-    (`__fast_<c>`) so it evaluates once per row however many consumers read
-    it (Catalyst keeps the projection boundary: the aliases are non-cheap and
-    multiply referenced). Shared by the split and inline variants."""
-    fast_names = {c: f"__fast_{c}" for c in cols}
-    base = df.select(
-        "*",
-        *[
-            F.transform(
-                F.col(c), lambda x: F.unix_timestamp(_fast_parse(x)).cast("double")
-            ).alias(fast_names[c])
-            for c in cols
-        ],
-    )
-    return base, fast_names
 
 
 def _array_miss(col: Column, fast: Column) -> Column:
@@ -201,6 +204,17 @@ def _array_miss(col: Column, fast: Column) -> Column:
         ),
         F.lit(False),
     )
+
+
+def fast_parse_miss(cols: list[str]) -> Column:
+    """True on rows where any of the array<string> `cols` holds a non-null
+    element the Catalyst fast path cannot parse — exactly the rows
+    `parse_timestamp_array_columns` hands to dateutil. Counting it over a
+    table tells the caller whether the fallback has any row to process."""
+    miss = F.lit(False)
+    for c in cols:
+        miss = miss | _array_miss(F.col(c), _fast_array(F.col(c)))
+    return miss
 
 
 def parse_timestamp_array_columns(
@@ -216,74 +230,37 @@ def parse_timestamp_array_columns(
     keep a pure-JVM plan, only rows with at least one unparseable-by-Catalyst
     element flow through dateutil, and the two branches union back. Upstream
     should be (cheaply recomputable or) checkpointed since both branches scan
-    it.
-    """
-    base, fast_names = _with_fast_arrays(df, cols)
-    if not use_dateutil_fallback:
-        sel = [
-            F.filter(F.col(fast_names[c]), lambda x: x.isNotNull()).alias(c)
-            if c in cols
-            else c
-            for c in df.columns
-        ]
-        return base.select(*sel)
-    miss = None
-    for c in cols:
-        m = _array_miss(F.col(c), F.col(fast_names[c]))
-        miss = m if miss is None else (miss | m)
-    base = base.withColumn("__miss", miss)
+    it. With use_dateutil_fallback=False there is no split and no Python
+    stage: fast-path misses are dropped, which is exact when the caller has
+    counted none (`fast_parse_miss`).
 
-    clean = base.where(~F.col("__miss")).select(
-        *[
-            F.filter(F.col(fast_names[c]), lambda x: x.isNotNull()).alias(c)
-            if c in cols
-            else c
-            for c in df.columns
-        ]
+    The fast arrays are projected as REAL columns (`__fast_<c>`) so each
+    evaluates once per row however many consumers read it (Catalyst keeps
+    the projection boundary: the aliases are non-cheap and multiply
+    referenced).
+    """
+    fast_names = {c: f"__fast_{c}" for c in cols}
+    base = df.select(
+        "*", *[_fast_array(F.col(c)).alias(fast_names[c]) for c in cols]
     )
-    dirty = base.where(F.col("__miss")).select(
-        *[
-            _dateutil_epoch_array(F.col(c), F.col(fast_names[c])).alias(c)
-            if c in cols
-            else c
-            for c in df.columns
-        ]
+
+    def _select(frame, parsed):
+        return frame.select(
+            *[parsed(c).alias(c) if c in cols else c for c in df.columns]
+        )
+
+    def _fast_ok(c):
+        return F.filter(F.col(fast_names[c]), lambda x: x.isNotNull())
+
+    if not use_dateutil_fallback:
+        return _select(base, _fast_ok)
+    miss = F.lit(False)
+    for c in cols:
+        miss = miss | _array_miss(F.col(c), F.col(fast_names[c]))
+    base = base.withColumn("__miss", miss)
+    clean = _select(base.where(~F.col("__miss")), _fast_ok)
+    dirty = _select(
+        base.where(F.col("__miss")),
+        lambda c: _dateutil_epoch_array(F.col(c), F.col(fast_names[c])),
     )
     return clean.unionByName(dirty)
-
-
-def parse_timestamp_array_inline(
-    df, cols: list[str], use_dateutil_fallback: bool = True
-):
-    """Single-pass row-gated variant of `parse_timestamp_array_columns`: no
-    clean/dirty branch split, so the input is scanned ONCE — the right shape
-    when upstream is expensive to recompute and unmaterialized (the
-    materialize_quintuples=False pipeline mode).
-
-    Why not `parse_timestamp_array` per column there: as a single expression
-    its fast-parse transform is substituted into every consumer (`fast_ok`,
-    the miss flag, both fallback arguments) and re-evaluated per appearance —
-    ~6 `try_to_timestamp` sweeps per array per row. Here the fast arrays are
-    materialized as REAL columns first, so each is computed once per row;
-    Catalyst keeps the projection boundary because the aliased expressions
-    are non-cheap and multiply referenced (same contract the clean/dirty
-    split relies on). Every row still crosses the ArrowEvalPython stage (the
-    row-gated UDF), which is why the split variant stays the default for
-    checkpointed inputs."""
-    base, fast_names = _with_fast_arrays(df, cols)
-    out = []
-    for c in df.columns:
-        if c not in cols:
-            out.append(F.col(c))
-            continue
-        fn = F.col(fast_names[c])
-        fast_ok = F.filter(fn, lambda x: x.isNotNull())
-        if not use_dateutil_fallback:
-            out.append(fast_ok.alias(c))
-            continue
-        miss = _array_miss(F.col(c), fn)
-        combined = _dateutil_epoch_array(
-            F.when(miss, F.col(c)), F.when(miss, fn)
-        )
-        out.append(F.when(miss, combined).otherwise(fast_ok).alias(c))
-    return base.select(*out)

@@ -1,13 +1,18 @@
 """Physical-plan shape assertions: the optimizations we rely on must be
 visible in `explain`, not assumed — column pruning of the binary html column,
-parquet filter pushdown, broadcast joins on the mapping tables, and skew
-utilities behaving deterministically."""
+parquet filter pushdown, broadcast joins on the mapping tables, and a Python
+timestamp-fallback stage only where the data needs one."""
+
+from datetime import datetime, timezone
 
 import pyspark.sql.functions as F
 
-from itext2kg_spark.functions.skew import salted_repartition, domain_of
+from itext2kg_spark.config import ATOM
+from itext2kg_spark.extract.embed import HashEmbedder
+from itext2kg_spark.merge.kg import canonicalize_kg
 from itext2kg_spark.pipeline import KGPipeline
 from itext2kg_spark.sources.pages import synth_pages
+from tests.kg_helpers import quintuples_df
 
 
 def _plan(df) -> str:
@@ -74,43 +79,58 @@ def test_edge_remap_uses_broadcast_joins(spark):
     assert "HashAggregate" in plan
 
 
-def test_remap_joins_execute_once_with_timeparse_split(spark):
-    """The timeparse clean/dirty split runs on the checkpointed quintuple
-    table BEFORE the remap joins, so the three broadcast joins appear ONCE in
-    the plan (splitting after the joins doubled them — each branch re-ran all
-    three). synth_pages emits dateutil-only temporal forms, so the dirty
-    branch is live; exactly one Python-eval subtree total."""
+def _python_evals(plan: str) -> int:
+    return plan.count("ArrowEvalPython") + plan.count("BatchEvalPython")
+
+
+def test_remap_plan_has_no_python_when_dates_parse_fast(spark):
+    """synth_pages' dates (ISO, ordinal, dotted) all parse in the Catalyst
+    fast path, so canonicalize_kg counts no misses and the edges plan
+    carries no Python-eval stage; the three broadcast joins appear once."""
     pages = synth_pages(spark, 40, seed=5)
-    pipe = KGPipeline()
-    _, edges = pipe.build_graph(pages)
+    _, edges = KGPipeline().build_graph(pages)
     plan = _plan(edges)
     assert plan.count("BroadcastHashJoin") == 3
-    assert plan.count("ArrowEvalPython") + plan.count("BatchEvalPython") == 1
+    assert _python_evals(plan) == 0
 
 
-def test_salted_repartition_spreads_hot_key(spark):
-    # one hot domain = 80% of rows; salt must spread it over many partitions
-    pages = synth_pages(spark, 400, seed=6, hot_share=0.8)
-    df = salted_repartition(pages, domain_of(F.col("url")), 16, salt=8)
-    per_part = (
-        df.where(F.col("url").contains("hot.example.com"))
-        .groupBy(F.spark_partition_id().alias("p"))
-        .count()
-        .collect()
+def test_remap_joins_execute_once_with_timeparse_split(spark):
+    """A date only dateutil reads ("1st of May 2020") switches the
+    clean/dirty timestamp split on. It runs on the checkpointed quintuple
+    table BEFORE the remap joins, so the three broadcast joins appear ONCE
+    in the plan (splitting after the joins doubled them — each branch re-ran
+    all three), with exactly one Python-eval subtree (the dirty branch)."""
+    from dateutil import parser as dparser
+
+    def row(idx, subj, t_start):
+        return {
+            "url": "u1", "obs_ts": datetime(2025, 7, 17), "lang": "en",
+            "fact_idx": idx, "fact": f"fact {idx}", "subj_name": subj,
+            "subj_label": "Person", "pred": "works_at", "obj_name": "Acme",
+            "obj_label": "Company", "t_start": t_start, "t_end": [],
+        }
+
+    q = quintuples_df(
+        spark, [row(0, "Ann Lee", ["1st of May 2020"]), row(1, "Bo Chan", ["2025-01-01"])]
     )
-    assert len(per_part) >= 4  # hot domain no longer lands in one partition
-    assert df.count() == 400
-    # deterministic: same input -> same partitioning decision
-    df2 = salted_repartition(pages, domain_of(F.col("url")), 16, salt=8)
-    a = sorted(r["p"] for r in per_part)
-    b = sorted(
-        r["p"]
-        for r in df2.where(F.col("url").contains("hot.example.com"))
-        .groupBy(F.spark_partition_id().alias("p"))
-        .count()
-        .collect()
-    )
-    assert a == b
+    _, edges = canonicalize_kg(q, ATOM, HashEmbedder())
+    plan = _plan(edges)
+    assert plan.count("BroadcastHashJoin") == 3
+    assert _python_evals(plan) == 1
+    got = {r["src_name"]: r["t_start"] for r in edges.collect()}
+    may_first = dparser.parse("1st of May 2020").replace(tzinfo=timezone.utc)
+    assert got["ann lee"] == [may_first.timestamp()]
+    assert got["bo chan"] == [datetime(2025, 1, 1, tzinfo=timezone.utc).timestamp()]
+
+
+def test_token_path_edges_have_no_temporal_python_stage(spark):
+    """The token extractor emits empty t_start/t_end arrays: the edges come
+    out with empty temporal lists and no Python-eval stage in the plan."""
+    pages = synth_pages(spark, 40, seed=5)
+    _, edges = KGPipeline(extraction="token").build_graph(pages)
+    assert _python_evals(_plan(edges)) == 0
+    rows = edges.select("t_start", "t_end").collect()
+    assert rows and all(r["t_start"] == [] and r["t_end"] == [] for r in rows)
 
 
 def test_grouped_eval_plan_shape(spark):

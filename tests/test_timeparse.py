@@ -85,11 +85,12 @@ def test_array_parse_no_fallback_flag(spark):
     assert row["p"] == [_dateutil_utc("2025-01-01")]
 
 
-def test_array_inline_variant_matches_expression_form(spark):
-    """parse_timestamp_array_inline (single-pass row-gated, fast arrays
+def test_array_columns_variant_matches_expression_form(spark):
+    """parse_timestamp_array_columns (clean/dirty row split, fast arrays
     materialized as columns) must be row-identical to the expression form
-    across fast/fuzzy/garbage/empty/null shapes, on BOTH array columns."""
-    from itext2kg_spark.functions.timeparse import parse_timestamp_array_inline
+    across fast/fuzzy/garbage/empty/null shapes, on BOTH array columns,
+    with the dateutil fallback on and off."""
+    from itext2kg_spark.functions.timeparse import parse_timestamp_array_columns
 
     arrays = [
         ["July 17th, 2025", "17.07.2025"],
@@ -102,7 +103,7 @@ def test_array_inline_variant_matches_expression_form(spark):
     df = spark.createDataFrame(rows, "id long, a array<string>, b array<string>")
     got = {
         r["id"]: (r["a"], r["b"])
-        for r in parse_timestamp_array_inline(df, ["a", "b"]).collect()
+        for r in parse_timestamp_array_columns(df, ["a", "b"]).collect()
     }
     exp = {
         r["id"]: (r["a"], r["b"])
@@ -116,7 +117,7 @@ def test_array_inline_variant_matches_expression_form(spark):
 
     nf = {
         r["id"]: r["a"]
-        for r in parse_timestamp_array_inline(
+        for r in parse_timestamp_array_columns(
             df, ["a"], use_dateutil_fallback=False
         ).collect()
     }
@@ -138,7 +139,9 @@ def test_fast_path_extensions_match_dateutil_exhaustively(spark):
     agree with dateutil on EVERY string: exhaustive over all aa.bb.yyyy
     numeric triples and all month/day ordinal layouts, plus adversarial
     near-misses that must keep falling through to the (identical) dateutil
-    fallback."""
+    fallback. Years 0 and 1-99 defer to dateutil too: it rejects year 0
+    (datetime MINYEAR = 1) and moves some small years into the current
+    century, where Spark's proleptic `yyyy` would keep them."""
     import itertools
 
     months = [
@@ -148,6 +151,8 @@ def test_fast_path_extensions_match_dateutil_exhaustively(spark):
     cases = []
     for a, b in itertools.product(range(0, 32), repeat=2):
         cases += [f"{a:02d}.{b:02d}.2025", f"{a}.{b}.2025"]
+    for a, b in itertools.product(range(0, 14), repeat=2):
+        cases += [f"{a:02d}.{b:02d}.0000", f"{a:02d}.{b:02d}.0099"]
     for mon in months:
         for day in (1, 2, 3, 4, 11, 13, 21, 22, 23, 30, 31):
             suf = (
@@ -161,12 +166,17 @@ def test_fast_path_extensions_match_dateutil_exhaustively(spark):
                 f"{day}{suf} {mon} 2025",
                 f"{mon} {day}th, 2025",
                 f"{mon.lower()} {day}{suf}, 2025",
+                f"{mon} {day}{suf}, 0000",
+                f"{day}{suf} {mon} 0000",
+                f"{mon} {day} 0099",
             ]
     cases += [
         "1st of May 2020", "2024-01-03rd", "31.04.2025", "00.00.2025",
         "13.13.2025", "12.31.99", "05.07.25", "July 17 th, 2025",
         "July 17th", "17th July", "1.2.3", "10.10.10.10",
         "August 1st, 2024 12:30:00",
+        "0000-01-01", "0000/01/01", "01/01/0000", "0001-01-01",
+        "0099-05-05 10:00:00", "05/05/0050", "0100-01-01", "1 May 0000",
     ]
     df = spark.createDataFrame([(c,) for c in cases], ["s"])
     got = {
